@@ -75,10 +75,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from technical_test_data_engineer_spark.operators.dedup import (
-        lsh_band_keys,
-        minhash_signature,
+        band_table,
         simhash_packed,
-        word_shingles,
     )
     from technical_test_data_engineer_spark.operators.similarity import (
         exact_dot,
@@ -107,12 +105,9 @@ def main() -> None:
         "doc_id long, text string",
     )
     for _portable in (False, True):
-        _sig = minhash_signature(
-            word_shingles("text", 3), 32, 42, _portable
-        )
-        _docs.select(
-            F.explode(lsh_band_keys(_sig, 8, 4, _portable)).alias("_b")
-        ).write.format("noop").mode("overwrite").save()
+        band_table(_docs, portable=_portable).write.format("noop").mode(
+            "overwrite"
+        ).save()
     _docs.select(simhash_packed("text").alias("_s")).write.format(
         "noop"
     ).mode("overwrite").save()

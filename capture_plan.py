@@ -1,8 +1,10 @@
-"""Capture .explain('formatted') for named queries into plans/r15/.
+"""Capture .explain('formatted') for named queries.
 
-Usage: python capture_plan.py <suffix> q1 q2 ...
-Writes plans/r15/<query>_<suffix>.txt. Not part of the bench path —
-plan compilation only, no job runs (safe to run alongside other work).
+Usage: python capture_plan.py <out_dir> <suffix> q1 q2 ...
+Writes <out_dir>/<query>_<suffix>.txt. Not part of the bench path. The
+queries are built but not executed; building some of them runs Spark
+jobs (driver-side collects, persisted intermediates), so a capture can
+contend with other Spark work on the same machine.
 """
 from __future__ import annotations
 
@@ -14,10 +16,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir = Path(sys.argv[1])
+    suffix = sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = Path(__file__).resolve().parent / "plans" / "r15"
     out_dir.mkdir(parents=True, exist_ok=True)
 
     from technical_test_data_engineer_spark.plans.star_queries import QUERIES

@@ -19,8 +19,9 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window
 
-from technical_test_data_engineer_spark.functions.hof import bind
+from technical_test_data_engineer_spark.functions.hof import bind, bind_sql
 from technical_test_data_engineer_spark.operators.partitioning import fan_out
+from technical_test_data_engineer_spark.operators.text import md5_hash64_sql
 from technical_test_data_engineer_spark.operators.windows import top1_per_group
 
 # Band buckets larger than this never enter a candidate self-join: a
@@ -34,6 +35,11 @@ from technical_test_data_engineer_spark.operators.windows import top1_per_group
 # produce (≤500-doc oracle subsets), so capping changes no
 # oracle-checked result; production tunes it per corpus.
 DEFAULT_HOT_BUCKET_CAP = 1000
+
+
+def _sql_name(col: str) -> str:
+    """``col`` as a back-quoted SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
 
 
 def cap_hot_buckets(
@@ -119,75 +125,66 @@ def jaccard(a: Column, b: Column) -> Column:
 
 
 def minhash_signature(
-    shingles: Column, num_hashes: int = 32, seed: int = 42, portable: bool = False
+    shingles_col: str, num_hashes: int = 32, seed: int = 42, portable: bool = False
 ) -> Column:
-    """MinHash signature (array<long>, length ``num_hashes``): the i-th
-    element is min over shingles of xxhash64(seed_i, shingle). Each scan
-    task computes signatures for its rows independently — embarrassingly
-    parallel, no shuffle.
+    """MinHash signature (array<long>, length ``num_hashes``) of the
+    array<string> column named ``shingles_col``: the i-th element is
+    min over shingles of ``xxhash64(seed + i, xxhash64(shingle))``.
+    Each scan task computes signatures for its rows independently —
+    embarrassingly parallel, no shuffle.
+
+    Returns ONE SQL expression (``F.expr``) over the column name, so the
+    whole num_hashes-wide family is built in a single JVM call. Each
+    shingle string is hashed once; the base-hash array is let-bound
+    (:func:`~technical_test_data_engineer_spark.functions.hof.bind_sql`)
+    and the num_hashes functions rehash its fixed 8-byte values.
+    Bind the result to a named column and band THAT column
+    (:func:`_minhash_base_and_bands`): any expression that inlines the
+    signature N times evaluates it N times per row.
 
     ``portable=True`` swaps xxhash64 for the md5-derived 60-bit hash
-    (text.md5_hash64) with string-keyed rehashing — ~3× slower but
+    (text.md5_hash64) with string-keyed rehashing
+    (``md5_hash64(concat_ws(':', seed + i, h))``) — ~3× slower but
     reproducible in DuckDB, which makes the WHOLE MinHash pipeline
     oracle-pairable (see plans/dedup_queries.minhash_near_dups_md5)."""
-    # Hash each variable-length shingle string ONCE, then derive the
-    # num_hashes functions by rehashing the fixed 8-byte value — ~num_
-    # hashes× less string traversal. The base-hash array is let-bound:
-    # without bind, each of the num_hashes transforms re-evaluates the
-    # base expression (and the shingle expression under it), so string
-    # hashing would run num_hashes× per row.
-    # NB: closures, not default args — PySpark counts lambda parameters
-    # to decide how many lambda variables to bind, so `lambda s, i=i`
-    # would receive the ARRAY INDEX as `i`, not the hash index.
     if portable:
-        from technical_test_data_engineer_spark.operators.text import md5_hash64
+        base = md5_hash64_sql("s")
 
-        base_hash = md5_hash64
-
-        def rehash(i: int, h: Column) -> Column:
-            return md5_hash64(
-                F.concat_ws(":", F.lit(str(seed + i)), h.cast("string"))
-            )
+        def rehash(i: int) -> str:
+            return md5_hash64_sql(f"concat_ws(':', '{seed + i}', CAST(h AS STRING))")
 
     else:
-        base_hash = F.xxhash64
+        base = "xxhash64(s)"
 
-        def rehash(i: int, h: Column) -> Column:
-            return F.xxhash64(F.lit(seed + i), h)
+        def rehash(i: int) -> str:
+            return f"xxhash64({seed + i}, h)"
 
-    raw = F.transform(shingles, lambda s: base_hash(s))
-
-    def _with_base(base: Column) -> Column:
-        def _minhash(i: int) -> Column:
-            return F.array_min(F.transform(base, lambda h: rehash(i, h)))
-
-        return F.array(*[_minhash(i) for i in range(num_hashes)])
-
-    return bind(raw, _with_base)
+    mins = ", ".join(
+        f"array_min(transform(b, h -> {rehash(i)}))" for i in range(num_hashes)
+    )
+    raw = f"transform({_sql_name(shingles_col)}, s -> {base})"
+    return F.expr(bind_sql(raw, "b", f"array({mins})"))
 
 
 def lsh_band_keys(
-    sig: Column, bands: int, rows_per_band: int, portable: bool = False
+    sig_col: str, bands: int, rows_per_band: int, portable: bool = False
 ) -> Column:
-    """Band the signature: array of (band_id, band_hash) structs. Two
+    """Band the signature column named ``sig_col``: array of (band,
+    bh) structs, ``bh`` the hash of the band's comma-joined values. Two
     docs are candidates iff any band hashes equal — P(candidate) =
-    1-(1-j^r)^b for Jaccard j. ``portable`` mirrors minhash_signature."""
-    if portable:
-        from technical_test_data_engineer_spark.operators.text import md5_hash64
+    1-(1-j^r)^b for Jaccard j. Returns ONE SQL expression (``F.expr``)
+    over the column name; ``portable`` mirrors minhash_signature."""
+    sig = _sql_name(sig_col)
 
-        bh_fn = md5_hash64
-    else:
-        bh_fn = F.xxhash64
-    entries = []
-    for b in range(bands):
-        chunk = F.slice(sig, b * rows_per_band + 1, rows_per_band)
-        entries.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                bh_fn(F.concat_ws(",", F.transform(chunk, lambda x: x.cast("string")))).alias("bh"),
-            )
-        )
-    return F.array(*entries)
+    def bh(b: int) -> str:
+        chunk = f"slice({sig}, {b * rows_per_band + 1}, {rows_per_band})"
+        key = f"concat_ws(',', transform({chunk}, x -> CAST(x AS STRING)))"
+        return md5_hash64_sql(key) if portable else f"xxhash64({key})"
+
+    entries = ", ".join(
+        f"named_struct('band', {b}, 'bh', {bh(b)})" for b in range(bands)
+    )
+    return F.expr(f"array({entries})")
 
 
 def _minhash_base_and_bands(
@@ -199,28 +196,32 @@ def _minhash_base_and_bands(
     bands: int,
     seed: int,
     portable: bool,
+    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared front of the all-pairs and incremental candidate
-    pipelines: ``base`` is the persisted (id, shingles, signature)
-    relation (feeds banding AND both verify sides — without persist
-    each branch re-shingles the corpus; fan_out spreads the per-row
-    hash work when the input scan is under-split), ``banded`` the
-    LIGHT exploded (id, band, band-hash) rows (~24 B) that enter the
-    candidate equi-join. The KB-sized shingle arrays never ride the
-    join — they come back via :func:`_jaccard_verify` after pair dedup."""
-    rows_per_band = num_hashes // bands
+    """THE text → shingles → signature → bands front shared by every
+    MinHash consumer (all-pairs, incremental, :func:`band_table`, the
+    streaming band pipeline): ``base`` is the (id, shingles, signature)
+    relation, ``banded`` the LIGHT exploded (id, band, band-hash) rows
+    (~24 B) that enter the candidate equi-join. The signature is a
+    named column, so it is computed once per row and every band slices
+    that value. ``persist`` caches ``base`` for the candidate pipelines
+    (it feeds banding AND both verify sides — without persist each
+    branch re-shingles the corpus); fan_out spreads the per-row hash
+    work when a batch input scan is under-split. The KB-sized shingle
+    arrays never ride the join — they come back via
+    :func:`_jaccard_verify` after pair dedup."""
+    src = df.select(id_col, text_col)
     base = (
-        fan_out(df.select(id_col, text_col))
+        (src if src.isStreaming else fan_out(src))
         .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("_sh"))
-        .withColumn(
-            "_sig", minhash_signature(F.col("_sh"), num_hashes, seed, portable)
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("_sig", minhash_signature("_sh", num_hashes, seed, portable))
     )
+    if persist:
+        base = base.persist(StorageLevel.MEMORY_AND_DISK)
     banded = base.select(
         id_col,
         F.explode(
-            lsh_band_keys(F.col("_sig"), bands, rows_per_band, portable)
+            lsh_band_keys("_sig", bands, num_hashes // bands, portable)
         ).alias("_b"),
     ).select(id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"))
     return base, banded
@@ -557,25 +558,13 @@ def band_table(
 ) -> DataFrame:
     """The light (id, band, band-hash) relation on its own — what a
     production deployment STORES (≈ bands × 16 B per doc) instead of
-    recomputing shingles + signatures from text per ingest."""
-    rows_per_band = num_hashes // bands
-    return (
-        fan_out(df.select(id_col, text_col))
-        .select(
-            F.col(id_col),
-            F.explode(
-                lsh_band_keys(
-                    minhash_signature(
-                        word_shingles(text_col, shingle_n), num_hashes, seed
-                    ),
-                    bands,
-                    rows_per_band,
-                    portable,
-                )
-            ).alias("_b"),
-        )
-        .select(id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"))
-    )
+    recomputing shingles + signatures from text per ingest. Batch or
+    streaming ``df``; ``portable`` applies to signature and band hashes
+    alike."""
+    return _minhash_base_and_bands(
+        df, id_col, text_col, shingle_n, num_hashes, bands, seed, portable,
+        persist=False,
+    )[1]
 
 
 def materialize_band_table(

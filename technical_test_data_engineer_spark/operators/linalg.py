@@ -290,15 +290,20 @@ def _moment_agg(
 
 
 def _validate_moments(rows, label: str) -> tuple[int, int]:
-    """Uniformity + int64-overflow checks on the collected D²-bounded
-    moment rows (shared by pca_components / covariance_matrix).
-    Returns (n, d)."""
+    """Uniformity, sample-size and int64-overflow checks on the
+    collected D²-bounded moment rows (shared by pca_components /
+    covariance_matrix). Returns (n, d)."""
     n_lo = min(r["_c"] for r in rows)
     n = max(r["_c"] for r in rows)
     if n_lo != n:
         raise ValueError(
             f"{label}: ragged or null vectors — per-term counts range "
             f"{n_lo}..{n}, expected one count for every (i, j) pair"
+        )
+    if n < 2:
+        raise ValueError(
+            f"{label}: the (n-1) sample covariance needs n >= 2 "
+            f"vectors, got n={n}"
         )
     if any(r["_m"] * float(n) >= float(2**62) for r in rows):
         raise ValueError(

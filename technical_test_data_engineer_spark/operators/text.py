@@ -152,6 +152,12 @@ def md5_hash64(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
+def md5_hash64_sql(x: str) -> str:
+    """:func:`md5_hash64` as SQL text over the SQL expression ``x`` —
+    the same hash, for expression families built as one ``F.expr``."""
+    return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def md5_bucket(c: Column | str, n_buckets: int = 100) -> Column:
     """THE content-hash bucketing convention (first 8 hex digits of md5,
     mod ``n_buckets``): deterministic, engine-portable (DuckDB:

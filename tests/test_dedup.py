@@ -3,6 +3,7 @@ hash-based approximations, SURVEY.md §7 hard-part #3) + exact metrics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from technical_test_data_engineer_spark.operators.dedup import (
@@ -331,3 +332,202 @@ def test_loop_twin_fixture_cap_inactive(spark):
         .collect()[0][0]
     )
     assert max_bucket < DEFAULT_HOT_BUCKET_CAP, max_bucket
+
+
+# MinHash golden values: (signature, per-band hash) of three fixed docs
+# under both hash families, captured from the original Column-composed
+# builders. Any change
+# to the hash conventions (seeded xxhash64 / md5-15-hex rehash, the
+# comma-joined band keys) shows up here as a literal mismatch.
+_GOLDEN_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "a b"),  # shorter than n words: whole text is one shingle
+    (3, "spark query engines scale to many terabytes of text today"),
+]
+_GOLDEN = {
+    False: {
+        "sig": {
+            1: (
+                2715941604714127536, -8540397928391236744, -9058374250418601238,
+                -8157531427031984492, -8673155179644165439,
+                -8674998710823896393, -8021025872377661311,
+                -7061889652874787315, -8685754645163073606,
+                -7592270703177338895, -8885987875168813293,
+                -8019164851282560333, -7331972879179354922,
+                -5180779837917881349, -9131819196861081170,
+                -7517850084079056991, -8153121180121122992,
+                -4739685940339098901, -8515692007999169340,
+                -2644646468056067154, -4692513826164276541,
+                -6673691428327526817, -7842854964866666611,
+                -6227012703798529434, -7121333934631763994,
+                -4927949980581656822, -9106559693190502535,
+                -7874453842107173669, -9128996803759463645,
+                -7975850242972467269, -9100030833589598980, -7685791601074335322,
+            ),
+            2: (
+                -6329393701628165031, -5432251147969387931,
+                -5797746198288252871, 8938083048805542818, -3620740095190823753,
+                8033030381544932665, -2580960961282748366, 5588246066557293088,
+                -738034458884638513, 1627467055556013906, -7224060890593736529,
+                -6658062393494588633, 3483753434474928296, -6211461608647625349,
+                357615929322986728, 7492631039297811062, -8940611527025933792,
+                -3678397517463077212, 1662256102018992963, -3721484118560676099,
+                925922654734573216, -3665906453195426404, 969791611612075724,
+                887617191979111880, 977444232682293773, 4144743433349401718,
+                5147275367121197764, 4549935010871149889, -2625175635133054955,
+                3757477352149964411, -2384976225382906762, 5283710712139580175,
+            ),
+            3: (
+                -7642100306534866493, -6612617790047657583,
+                -7663173060530834811, -7601357033280860447,
+                -7765101046122321631, -5704188873308897559,
+                -8612535643912530991, -5240242572117475671,
+                -8976836024210351712, -5184268857459979657,
+                -3242478688937827936, -4356638146896121810,
+                -6837117384582659237, -8398292945770966755,
+                -5386813256793162722, -7987024002379004511,
+                -7048741926955656411, -9103895557182544559,
+                -7861410406907834225, -7435154767560326853,
+                -7201877152383547843, -5690163006023156948,
+                -8180762471532388923, -5562567668479718266,
+                -6839961825053259226, -9023033085658470129,
+                -5448026247438972709, -8569731716892895932,
+                -7038220608451853575, -7140524466646970482,
+                -8167713929550591287, -5016529973688695569,
+            ),
+        },
+        "bands": {
+            1: (
+                -2461425675308283048, -3192952433592459466,
+                -8347932230487240024, -5252883791237406974,
+                -8707764208426893047, -5221441425874407181, 5833531570935365252,
+                7558099193934688457,
+            ),
+            2: (
+                -3718281593205048045, -5477343530024536307, 4096670789620746200,
+                -2376602604405365109, -9151607209801967276,
+                -8921941736714397703, 5415459948268073797, -1773980350664885322,
+            ),
+            3: (
+                2730050797528528639, -8159426385540417034, -2826439483869220464,
+                8373963366115331613, -1055408368510012363, 8298297682138065175,
+                8656675787833833018, 9102647549916694167,
+            ),
+        },
+    },
+    True: {
+        "sig": {
+            1: (
+                160771114455142242, 18773080016843869, 17306810710854777,
+                340871790524086219, 29655652618776287, 229401515556448607,
+                254243711716632132, 200059901277399189, 153053284859681458,
+                57082086321589289, 204389684533430737, 432189626402954797,
+                203427244007946499, 98837294857358585, 140321864255198260,
+                78774251708875378, 128448576343853906, 12893676354473400,
+                106066839815500029, 220647355628153539, 590504607837486223,
+                218367437818792678, 355092413538503410, 58454442516025234,
+                27742349575572223, 19093341886945424, 34862135036538808,
+                459658660424046299, 18156686875304630, 361367721788607449,
+                140437000674190070, 141246938689891189,
+            ),
+            2: (
+                916057339139529073, 28821743517399948, 525542339672120589,
+                1005394221831158884, 1013008201592228566, 1001205289212235565,
+                737798094899513439, 1080948359658425045, 904364836217115282,
+                97660345297853893, 967739415403359218, 464927232704270942,
+                1004766933744566018, 380135176164946327, 597639096613710880,
+                174557297892444810, 545875873770127571, 1028083365947974481,
+                510292917143299569, 418027430614507730, 455496281625784384,
+                323719309975266463, 484949300530942300, 76601631624021576,
+                50057241616823927, 690584200261255136, 229178140902723303,
+                508658228170897091, 834093343533434915, 147534163571140196,
+                902043676980403392, 351149451471154643,
+            ),
+            3: (
+                38478060544159714, 130850641370698173, 94507257265366793,
+                173942684063049778, 7540631186755696, 20156225298789940,
+                16355249315263418, 186864218758409523, 511692882131346275,
+                343830858082891774, 8052585709966355, 261516803926956049,
+                31114743672930571, 37835402583148334, 83937459137343584,
+                24321840694685324, 63471175820976671, 50089022628646379,
+                424102817117066593, 64988032635429667, 20182324970622713,
+                1773627079992929, 173941145975326124, 101656988182978096,
+                5322494986815722, 283208272859666482, 95498746581633672,
+                50698747844717340, 25161061801805780, 37591411904196298,
+                62213948655156937, 32140562958793368,
+            ),
+        },
+        "bands": {
+            1: (
+                1043046015701021072, 416346769109624511, 348414367178235061,
+                230596119438839986, 888189516994448806, 1056499993337816886,
+                1070597585028799711, 818594164351959762,
+            ),
+            2: (
+                959920941662159644, 65185907915571602, 163303113506901612,
+                544104606288209709, 377945253244462232, 272704651708468247,
+                1022081460627687861, 436716640111442402,
+            ),
+            3: (
+                977241741523792360, 676227112646413785, 137098850317002551,
+                176038579862923676, 239428999642667079, 131825659684403990,
+                376675044846789658, 1119413419443272685,
+            ),
+        },
+    },
+}
+
+
+@pytest.mark.parametrize("portable", [False, True])
+def test_minhash_golden_values(spark, portable):
+    from technical_test_data_engineer_spark.operators.dedup import (
+        _minhash_base_and_bands,
+    )
+
+    df = spark.createDataFrame(_GOLDEN_DOCS, "doc_id long, text string")
+    base, banded = _minhash_base_and_bands(
+        df, "doc_id", "text", 3, 32, 8, 42, portable
+    )
+    try:
+        sigs = {r.doc_id: tuple(r._sig) for r in base.collect()}
+        bands: dict[int, list[int]] = {}
+        for r in banded.orderBy("doc_id", "_band").collect():
+            bands.setdefault(r.doc_id, []).append(r._bh)
+        want = _GOLDEN[portable]
+        assert sigs == want["sig"]
+        assert {d: tuple(b) for d, b in bands.items()} == want["bands"]
+    finally:
+        base.unpersist()
+
+
+def test_band_table_portable_is_fully_portable(spark):
+    # portable applies to the signature AND the band hashes: band_table
+    # equals the banded rows of the shared front under the same flag
+    from technical_test_data_engineer_spark.operators.dedup import (
+        _minhash_base_and_bands,
+        band_table,
+    )
+
+    df = spark.createDataFrame(_GOLDEN_DOCS, "doc_id long, text string")
+    base, banded = _minhash_base_and_bands(
+        df, "doc_id", "text", 3, 32, 8, 42, True
+    )
+    try:
+        want = sorted(banded.collect())
+        assert sorted(band_table(df, portable=True).collect()) == want
+    finally:
+        base.unpersist()
+
+
+@pytest.mark.parametrize(
+    "portable, xxhash, md5", [(False, 32 + 1 + 8, 0), (True, 0, 32 + 1 + 8)]
+)
+def test_band_table_hashes_signature_once(spark, plan_nodes, portable, xxhash, md5):
+    # one base hash per shingle + num_hashes rehashes + one hash per
+    # band: the signature is a named column the 8 band slices share,
+    # not an expression copied into each band
+    from technical_test_data_engineer_spark.operators.dedup import band_table
+
+    df = spark.createDataFrame(_GOLDEN_DOCS, "doc_id long, text string")
+    nodes = plan_nodes(band_table(df, portable=portable))
+    assert (nodes["XxHash64"], nodes["Md5"]) == (xxhash, md5), nodes

@@ -73,6 +73,18 @@ def test_pca_components_fails_loud_on_bad_input(spark):
         pca_components(ragged, k=2)
 
 
+def test_covariance_single_row_fails_loud(spark):
+    """n=1 has no (n-1) sample covariance: a labelled ValueError, not
+    a bare ZeroDivisionError from the driver-side divide."""
+    import pytest
+
+    one = spark.createDataFrame(
+        [(0, [1.0, 2.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="covariance_matrix: .*n >= 2"):
+        covariance_matrix(one)
+
+
 def test_pca_projection_variance_equals_eigenvalues(spark):
     emb, mat = _corpus(spark)
     _, _, vals = pca_components(emb, k=4)

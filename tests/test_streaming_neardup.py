@@ -152,3 +152,21 @@ def test_stream_state_ttl_evicts_idle_buckets(spark, tmp_path):
         for r in _stream_pairs(spark, str(d), "t_neardup_nottl").collect()
     }
     assert (0, 2) in without, without
+
+
+def test_stream_band_frame_hashes_signature_once(spark, plan_nodes, tmp_path):
+    # the streaming band rows share the batch band front: the executed
+    # micro-batch plan holds one signature (32 rehashes + 1 base hash)
+    # plus one hash per band — not a signature copy per band
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "a b c d e"), (2, "x y z")], DOCS_STREAM_SCHEMA
+    ).write.parquet(path)
+    stream = spark.readStream.schema(DOCS_STREAM_SCHEMA).parquet(path)
+    q = memory_sink(
+        stream_minhash_candidates(stream), "t_neardup_shape",
+        output_mode="append",
+    )
+    q.awaitTermination()
+    nodes = plan_nodes(q._jsq.streamingQuery().lastExecution())
+    assert nodes["XxHash64"] == 32 + 1 + 8, nodes
