@@ -65,11 +65,14 @@ Expected multi-scans (all reviewed):
 - dsir_en_selection ×2: one corpus pass builds BOTH bucket models
   (conditional-count agg, persisted ≤n_buckets rows; totals summed
   from that table, never the corpus), one pass scores docs
-- doc_unigram_logprob / source_doremi_mixture ×2 since r15: one pass
-  builds the unigram count model (n_total now rides it as a window
-  total — the r14 forms' THIRD pass, a separate corpus count job, is
-  gone), one pass is the per-token scoring join side; materializing
-  the token stream to avoid the second pass measured slower (the
+- doc_unigram_logprob / source_doremi_mixture ×3 in the plan, ×2 at
+  runtime: one pass builds the unigram count model, one pass is the
+  per-token scoring join side; the third listed scan is n_total's
+  broadcast 1-row sum over the same count aggregate, which reads the
+  reused count exchange at runtime (it replaced an unpartitioned
+  window total that pulled the vocabulary into one task; the r14
+  forms' separate corpus count job stays gone). Materializing the
+  token stream to avoid the second pass measured slower (the
   k-weighted pre-agg negative in OPTIMIZATION_r15.md)
 - doc_repeated_spans ×2: gram relation feeds the occurrence-count agg
   and the repeated-hit join-back (tfidf-style self-join; scan-side

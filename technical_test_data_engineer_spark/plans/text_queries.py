@@ -351,9 +351,12 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed in DECIMAL so the aggregate is order-independent and matches
     the oracle despite libm-vs-JVM last-ulp differences.
 
-    r15 (guide §1.2/§2.4): n_total attaches as a window total on the
-    vocabulary-sized count frame instead of a separate corpus count
-    job, removing one of the three scan+tokenize+explode passes. (The
+    r15 (guide §1.2/§2.4): n_total is summed off the vocabulary-sized
+    count frame instead of a separate corpus count job, removing one
+    of the three scan+tokenize+explode passes. It is a 1-row aggregate
+    broadcast back onto the counts, not an unpartitioned window total,
+    which would pull the whole vocabulary into one task; both branches
+    read the same (reused) count exchange. (The
     measured-negative alternative — pre-aggregating to a persisted
     (doc, term, k) frame with k-weighted decimal products — ran 1.6×
     SLOWER: at this vocabulary shape the pre-agg barely shrinks the
@@ -363,10 +366,9 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles; oracle unchanged."""
     docs = _docs(spark, sf_dir)
     tok = TX.tokens_long(docs)
-    counts = (
-        tok.groupBy("term")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("_n_total", F.sum("cnt").over(Window.partitionBy()))
+    counts = tok.groupBy("term").agg(F.count("*").alias("cnt"))
+    counts = counts.crossJoin(
+        F.broadcast(counts.agg(F.sum("cnt").alias("_n_total")))
     )
     neg_ln = F.round(
         -F.log(
@@ -2479,18 +2481,18 @@ def source_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free; excess_loss crosses zero by construction, so it carries
     the `+ 0.0` signed-zero normalization (r07 cusum lesson).
 
-    r15 (guide §1.2/§2.4, the doc_unigram_logprob twin): n_total
-    attaches as a window total on the vocabulary-sized count frame
+    r15 (guide §1.2/§2.4, the doc_unigram_logprob twin): n_total is
+    summed off the vocabulary-sized count frame (a broadcast 1-row
+    aggregate, never a vocabulary-wide single-partition window)
     instead of a separate corpus count job, removing one of the three
     scan+tokenize+explode passes. (The k-weighted (source, term, k)
     pre-agg alternative measured SLOWER — see doc_unigram_logprob.)
     Same per-occurrence decimal sum; oracle unchanged."""
     docs = _docs(spark, sf_dir)
     tok = docs.select("source", F.explode(TX.tokens("text")).alias("term"))
-    counts = (
-        tok.groupBy("term")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("_n_total", F.sum("cnt").over(Window.partitionBy()))
+    counts = tok.groupBy("term").agg(F.count("*").alias("cnt"))
+    counts = counts.crossJoin(
+        F.broadcast(counts.agg(F.sum("cnt").alias("_n_total")))
     )
     neg_ln = F.round(
         -F.log(

@@ -3483,9 +3483,14 @@ def daily_revenue_repeated_median(
     ties (adversarially discriminated and pinned in
     tests/test_round15_ops.py) — and every slope/residual is the same
     IEEE double expression the old plan evaluated, so all five output
-    values are bit-identical. SCALE CEILING: the driver matrix is
-    d²·8 B (~46 MB at 2.4k days; ~10 GB at a century of daily grain)
-    — past that, the documented fallback is this query's previous
+    values are bit-identical. SCALE CEILING: the driver peak is about
+    4·d²·8 B, not the d²·8 B of one matrix — dx, dy and the two
+    masked copies dy[off]/dx[off] are live at once, plus the d²-byte
+    off-diagonal mask (measured 4.1·d²·8 B at d=1000; the quotient
+    reuses a temporary and the in-place row sort adds no d² buffer;
+    without numpy's temporary elision it is 5·d²·8 B). That is ~190 MB
+    at 2.4k days and ~45 GB at a century of daily grain — past a
+    driver's heap, the documented fallback is this query's previous
     shape (grouped percentile over the pair NLJ, every buffer
     d-bounded). Oracle unchanged."""
     import math

@@ -396,6 +396,10 @@ _NONEQUI_ALLOWLIST = {
     "nation_theil_decomposition", # 1-row (n, total) broadcast attach
     "customer_partition_ari",     # 1-row combinatorics broadcast
                                   # attaches (row/col pair counts)
+    "doc_unigram_logprob",        # 1-row token-total broadcast attach
+                                  # onto the vocabulary count frame
+    "source_doremi_mixture",      # 1-row token-total broadcast attach
+                                  # (the doc_unigram_logprob twin)
 }
 
 
