@@ -248,36 +248,27 @@ Usage: python audit_scans.py [sf_dir]
 
 from __future__ import annotations
 
-import re
 import sys
-from collections import Counter
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
+    from technical_test_data_engineer_spark.observe import release, scan_counts
     from technical_test_data_engineer_spark.plans import QUERIES
     from technical_test_data_engineer_spark.session import get_spark
 
     spark = get_spark("scan_audit", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    pat = re.compile(
-        r"InMemoryFileIndex\s*(?:\(\d+ paths\))?\s*\[[^\]]*?/(\w+)\.parquet"
-    )
     for name, fn in QUERIES.items():
         try:
-            df = fn(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            dup = {t: c for t, c in Counter(pat.findall(plan)).items() if c > 1}
+            counts = scan_counts(fn(spark, sf_dir))
+            dup = {t: c for t, c in counts.items() if c > 1}
             if dup:
                 print(f"{name}: {dup}")
         except Exception as ex:  # noqa: BLE001
             print(f"{name}: ERROR {str(ex)[:120]}")
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release(spark)
     spark.stop()
 
 

@@ -1,11 +1,12 @@
 """Same-JVM alternating-order A/B: times the CURRENT registry form of
 each named query against the form at a given git ref, in one session
-with bench_solo's warmups, alternating old/new order per round.
+with bench.py's warm-up and timing (``observe.warm`` /
+``observe.run_once``), alternating old/new order per round.
 
 Usage:
   python bench_ab.py <git_ref> <rounds> q1 q2 ...
-The old forms are loaded by exec'ing the ref's plan modules with the
-real @query decorator (registrations are snapshotted and restored, so
+The old forms are loaded by exec'ing the ref's plan modules
+(``plans/*_queries.py``) with the real @query decorator (registrations are snapshotted and restored, so
 only the captured function handles differ). Prints per-query rep lists
 and min-of-rounds for both forms.
 """
@@ -15,20 +16,17 @@ import json
 import os
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 REPO = Path(__file__).resolve().parent
-MODULES = [
-    "technical_test_data_engineer_spark/plans/text_queries.py",
-    "technical_test_data_engineer_spark/plans/tpch_extra_queries.py",
-    "technical_test_data_engineer_spark/plans/similarity_queries.py",
-    "technical_test_data_engineer_spark/plans/relational_breadth_queries.py",
-    "technical_test_data_engineer_spark/plans/dedup_queries.py",
-    "technical_test_data_engineer_spark/plans/window_queries.py",
-]
+MODULES = sorted(
+    p.relative_to(REPO).as_posix()
+    for p in (REPO / "technical_test_data_engineer_spark/plans").glob(
+        "*_queries.py"
+    )
+)
 
 
 def main() -> None:
@@ -56,9 +54,10 @@ def main() -> None:
         SQ.ORACLE.clear()
         g = {"__name__": f"old_{Path(mod).stem}"}
         exec(compile(src, f"<{ref}:{mod}>", "exec"), g)
-        for n in names:
-            if n in QUERIES:
-                old_fns[n] = QUERIES[n]
+        # star_queries.py defines the registry itself: its old forms
+        # land in the exec'd module's own QUERIES
+        for reg in (QUERIES, g.get("QUERIES", {})):
+            old_fns.update({n: reg[n] for n in names if n in reg})
         QUERIES.clear()
         QUERIES.update(snapshot_q)
         SQ.ORACLE.clear()
@@ -67,41 +66,29 @@ def main() -> None:
     if missing:
         sys.exit(f"old form not found for {missing} (module list?)")
 
+    from technical_test_data_engineer_spark.observe import run_once, warm
     from technical_test_data_engineer_spark.session import get_spark
 
     spark = get_spark(
         "bench_ab", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql.functions import pandas_udf
+    warm(spark, int(cpus))
 
-    identity = pandas_udf(lambda s: s, "long")
-    spark.range(int(cpus) * 4).repartition(int(cpus)).select(
-        identity("id")
-    ).count()
-
-    def run_once(fn) -> float:
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        el = time.time() - t0
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        spark._jvm.System.gc()
-        return round(el, 3)
+    def run(fn) -> float:
+        return round(run_once(spark, fn, sf_dir)[1], 3)
 
     res = {n: {"old": [], "new": []} for n in names}
     # warm both forms once (uncounted) so JIT/codegen state is shared
     for n in names:
-        run_once(old_fns[n])
-        run_once(new_fns[n])
+        run(old_fns[n])
+        run(new_fns[n])
     for r in range(rounds):
         order = ["old", "new"] if r % 2 == 0 else ["new", "old"]
         for n in names:
             for side in order:
                 fn = old_fns[n] if side == "old" else new_fns[n]
-                res[n][side].append(run_once(fn))
+                res[n][side].append(run(fn))
         print(f"# round {r}: " + json.dumps(res), file=sys.stderr)
     out = {
         n: {

@@ -22,25 +22,21 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir.mkdir(parents=True, exist_ok=True)
 
+    from technical_test_data_engineer_spark.observe import formatted_plan, release
     from technical_test_data_engineer_spark.plans.star_queries import QUERIES
     from technical_test_data_engineer_spark.session import get_spark
 
     spark = get_spark("capture_plan", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     for n in names:
-        df = QUERIES[n](spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        txt = formatted_plan(QUERIES[n](spark, sf_dir))
         p = out_dir / f"{n}_{suffix}.txt"
         p.write_text(txt)
         n_exch = txt.count("Exchange")
         n_scan = txt.count("Scan parquet")
         print(f"{n}: {len(txt.splitlines())} lines, {n_exch} Exchange, "
               f"{n_scan} scans -> {p.name}")
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release(spark)
     spark.stop()
 
 

@@ -3,28 +3,32 @@ PCA projection.
 
 The 100 TB shape: a covariance matrix is a D×D AGGREGATE of a corpus
 that never fits anywhere, while D (embedding width, 64 here) is tiny —
-so the corpus flows through one pass that emits per-(i, j) moment
-contributions, the D(D+1)/2 sums reduce with partial aggregation, and
-everything downstream of the D×D matrix (eigendecomposition, component
-selection) is driver-side numpy on a few KB. Projection then rides a
-broadcast of the component matrix back over the corpus in one
-Arrow-batched pass. This is the same small-side/large-side discipline
-as a broadcast join: the corpus is only ever scanned, never collected.
+so the corpus flows through ONE Arrow-batched pass (``_moment_agg``) in
+which each task folds its batches to D(D+1)/2 + D partial moment sums
+in numpy, a D²-bounded aggregate reduces those partials, and everything
+downstream of the D×D matrix (eigendecomposition, component selection)
+is driver-side numpy on a few KB. Projection then rides a broadcast of
+the component matrix back over the corpus in one Arrow-batched pass.
+This is the same small-side/large-side discipline as a broadcast join:
+the corpus is only ever scanned, never collected.
 
-Exactness: moment sums are INTEGER-scaled — each term rounds to 10
-decimals as ROUND(x * 1e10) and sums as BIGINT, then the total divides
-back by 1e10 — so the aggregate is order-independent and matches the
-DuckDB oracle exactly (float addition order would otherwise vary with
-partitioning and flake the hash gate). This is the same 10-decimal
-HALF_UP semantics as the old DECIMAL(30,10) cast, but (a) the sum runs
-as a whole-stage-codegen long instead of interpreted BigDecimal
-(~2.5x on the moments pass), and (b) rounding an ~1e8-magnitude double
-at 0 decimals sits far inside both engines' representations, killing
-the shortest-repr-vs-exact-binary tie class that made the old decimal
-casts disagree at ~1e-10 per affected term (r09 root cause of
-embedding_covariance's 11th-significant-digit drift). Scale bound:
-|x_i x_j| <= ~40 here, so per-term <= 4e11 and corpus sums stay far
-inside 2^53 for any fixture scale this gate runs at.
+The integer-scaled fold — the exactness convention this module, the
+int-dot kernels (``operators/similarity.int_scaled_dot``) and the
+moment-style relational queries share: each TERM rounds to 10 decimals
+as ROUND(t * 1e10, 0) (HALF_UP, Spark's double ROUND — mirrored
+bit-for-bit in numpy by ``round_half_up_1e10``) and the terms sum as
+int64, then the total divides back by 1e10 — ``SUM(CAST(ROUND(t * 1e10,
+0) AS BIGINT)) / 1e10`` on DuckDB. Integer addition is associative, so
+the result cannot depend on partitioning or summation order (float
+addition order would otherwise vary with partitioning and flake the
+oracle hash gate), and rounding an ~1e8-magnitude double at 0 decimals
+sits far inside both engines' representations, so there is no
+shortest-repr-vs-exact-binary tie class of the kind a DECIMAL(30,10)
+cast has (r09 root cause of embedding_covariance's
+11th-significant-digit drift). Overflow: past int64 a fold would wrap
+(Spark's non-ANSI long SUM silently, DuckDB's BIGINT cast with an
+error), so the moment fold here carries max|term| beside each sum and
+fails loud when n · max|term| reaches 2^62 (``_validate_moments``).
 
 No counterpart in the reference (its analytics are 2-D pandas,
 /root/reference/tasks/visualization/src/visualization.py); this is
@@ -38,84 +42,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_DEC = "decimal(30,10)"
-
-
-def _as_double(vec_col: str) -> str:
-    return f"transform({vec_col}, x -> cast(x as double))"
-
-
-def embedding_moments(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> tuple[DataFrame, DataFrame, int]:
-    """First and second moments of a vector column.
-
-    Returns ``(sums, cross, n)``: ``sums`` = (i, s) per-dimension exact
-    sums; ``cross`` = (i, j, sxy) upper-triangle (i ≤ j) exact sums of
-    x_i·x_j; ``n`` = row count. The cross products are generated
-    scan-side as ONE nested-transform expression (no self-join: each
-    row emits its D(D+1)/2 products inside its task), then reduced by
-    a single partial+final aggregation keyed on (i, j) — D²-bounded
-    state, corpus-sized input, one shuffle of tiny rows."""
-    from technical_test_data_engineer_spark.operators.partitioning import (
-        fan_out,
-    )
-
-    # fan_out: the local fixture is one parquet row-group, so without
-    # it the D(D+1)/2-products-per-row expression runs on ONE task
-    # (measured 7.4 s single-threaded at sf0.1 vs ~1.5 s spread)
-    df = fan_out(df.select(id_col, vec_col))
-    v = _as_double(vec_col)
-    # integer-scaled terms: round(x*1e10) as BIGINT — see module doc
-    pairs = F.expr(
-        f"""
-        flatten(transform({v}, (xi, i) ->
-            transform(slice({v}, i + 1, size({vec_col}) - i), (xj, j) ->
-                struct(i AS i, i + j AS j,
-                       cast(round(xi * xj * 1e10, 0) AS BIGINT) AS p))))
-        """
-    )
-    n = df.count()
-
-    # Overflow guard (r10, ADVICE item): past int64 Spark's non-ANSI
-    # long SUM wraps silently while DuckDB's HUGEINT->BIGINT cast
-    # throws — the engines would fail differently with no error here.
-    # max(abs(term)) rides the same shuffle as the sum (one extra agg
-    # buffer); n * maxabs < 2^62 proves the fold could not wrap, else
-    # raise. The check is per GROUP (D² rows), so its cost is nil.
-    def _guarded(sum_col: str, maxabs_col: str, out: str):
-        return F.when(
-            F.col(maxabs_col) * F.lit(float(n)) < F.lit(float(2**62)),
-            F.col(sum_col).cast("double") / F.lit(1e10),
-        ).otherwise(
-            F.raise_error(F.lit(
-                f"embedding_moments: integer-scaled {out} fold may "
-                f"exceed int64 at n={n} — rescale or shard the corpus"
-            ))
-        ).alias(out)
-
-    cross = (
-        df.select(F.explode(pairs).alias("e"))
-        .select("e.i", "e.j", "e.p")
-        .groupBy("i", "j")
-        .agg(
-            F.sum("p").alias("_s"),
-            F.max(F.abs(F.col("p"))).alias("_m"),
-        )
-        .select("i", "j", _guarded("_s", "_m", "sxy"))
-    )
-    xs = F.round(F.col("x") * F.lit(1e10), 0).cast("bigint")
-    sums = (
-        df.select(F.posexplode(F.expr(v)).alias("i", "x"))
-        .groupBy("i")
-        .agg(
-            F.sum(xs).alias("_s"),
-            F.max(F.abs(xs)).alias("_m"),
-        )
-        .select("i", _guarded("_s", "_m", "s"))
-    )
-    return sums, cross, n
 
 
 def covariance_matrix(

@@ -130,9 +130,10 @@ def int_scaled_dot(a: Column, b: Column) -> Column:
     """Order-stable inner product as an INTEGER-scaled BIGINT: each
     per-element double product rounds to 10 decimals as round(x*1e10)
     and sums as a long fold — exact, order-free, and cross-engine
-    bit-identical (the embedding_moments convention: rounding an
-    ~1e8-magnitude double at 0 decimals sits far inside both engines'
-    representations, and long adds beat interpreted BigDecimal ~2.5x).
+    bit-identical (the integer-scaled fold of the operators/linalg.py
+    module doc: rounding an ~1e8-magnitude double at 0 decimals sits
+    far inside both engines' representations, and long adds beat
+    interpreted BigDecimal ~2.5x).
     Use where only the ORDERING of dots matters (cell argmax, bucket
     routing) or where /1e10 precision suffices; :func:`exact_dot`
     remains the convention for surfaced decimal-exact scores. DuckDB

@@ -458,11 +458,13 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     off ONE Arrow fetch of the bounded corpus: anchor scores via the
     vectorized ``round_half_up_1e10`` mirror of ``int_scaled_dot``
     (identical int64s — parity-tested in tests/test_round15_ops.py),
-    the exact top-{TOP_K} via float64 dots with a 1e-6 candidate band
+    the exact top-{TOP_K} via float64 dots with a candidate band
     re-scored through the exact Decimal(repr)-quantize mirror of
-    ``exact_dot``'s DECIMAL(38,30) per-product cast (the float dot is
-    ≤ ~1e-12 from the decimal sum, so everything outside the band is
-    already strictly ordered), and the routing/recall arithmetic in
+    ``exact_dot``'s DECIMAL(38,30) per-product cast (the band is
+    derived from the dims and the largest vector norm, so everything
+    outside it is provably below the exact k-th score, and each band
+    member's float-vs-exact gap is checked at runtime, a labelled
+    RuntimeError on a breach), and the routing/recall arithmetic in
     plain ints. Replaces 8 interpreted 64-element HOF folds per corpus
     row + a 5×corpus decimal-fold crossJoin + two windows + two joins
     with numpy on ~3 MB. Results bit-identical; oracle unchanged."""
@@ -504,10 +506,26 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ordq = np.lexsort((np.arange(N_ANCHOR_CELLS), -adot[q]))
         qrank[q, ordq] = np.arange(1, N_ANCHOR_CELLS + 1)
 
-    # exact_dot mirror: float64 dots order everything outside a 1e-6
-    # band around the k-th score; band members re-score through the
-    # exact DECIMAL(38,30) per-product quantize (Decimal(repr))
+    # exact_dot mirror: float64 dots order everything outside a band
+    # around the k-th score; band members re-score through the exact
+    # DECIMAL(38,30) per-product quantize (Decimal(repr)).
+    # The band: with u = 2^-53, a float64 dot errs from the sum of its
+    # float64 products p by at most d·u·Σ|p| in any summation order
+    # (FMA included), and the exact key by at most u·Σ|p| (Decimal of
+    # the shortest repr) plus d half-steps of the 1e-30 quantize. Since
+    # Σ|p| ≤ ‖q‖‖c‖, every float dot sits within
+    # δ = (d+1)·u·max‖v‖² + d·5e-31 of its exact key. Then at most
+    # k-1 candidates float-score above K + δ (K = exact k-th key) and
+    # every exact top-k member float-scores at least K - δ: all of
+    # them lie within 2δ of the float k-th score. The band is 4δ, a 2x
+    # margin.
     from decimal import ROUND_HALF_UP, Decimal, localcontext
+
+    dims = V.shape[1]
+    delta = (dims + 1) * 2.0**-53 * float((V * V).sum(axis=1).max()) + (
+        dims * 5e-31
+    )
+    band_w = 4.0 * delta
 
     q30 = Decimal(1).scaleb(-30)
 
@@ -535,15 +553,22 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # float top-k with a safety band, then exact re-rank of the band
         k_eff = min(TOP_K, len(s))
         kth = np.partition(-s, k_eff - 1)[k_eff - 1]  # -score of k-th
-        band = np.nonzero(-s <= kth + 1e-6)[0]
-        ranked = sorted(
-            (
-                (-_exact_key(V[q], V[np.nonzero(ids == cand_ids[b])[0][0]]),
-                 int(cand_ids[b]))
-                for b in band
-            ),
-        )[:TOP_K]
-        top_rows[qid] = [vid for _, vid in ranked]
+        band = np.nonzero(-s <= kth + band_w)[0]
+        ranked = []
+        for b in band:
+            vid = int(cand_ids[b])
+            key = _exact_key(V[q], V[np.nonzero(ids == vid)[0][0]])
+            # the derivation above, checked on every re-scored member
+            # (2δ leaves room for float(key)'s own rounding)
+            gap = abs(float(key) - float(s[b]))
+            if gap > band_w / 2:
+                raise RuntimeError(
+                    f"knn_anchor_routing_recall: top-{TOP_K} band unsound "
+                    f"— query {qid} candidate {vid}: |float - exact| dot "
+                    f"{gap:.3e} > 2δ {band_w / 2:.3e}"
+                )
+            ranked.append((-key, vid))
+        top_rows[qid] = [vid for _, vid in sorted(ranked)[:TOP_K]]
 
     def _r6(x: float) -> float:
         return float(
@@ -1767,8 +1792,8 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.7 s → ~2 s in r08). r14 (r13 verdict item 5): the DECIMAL(38,30)
     accumulators on the centroid / norm / dot sums switched to the
     integer-scaled BIGINT fold convention (round(t·1e10) summed as
-    long — the price_quantity_elasticity / embedding_moments
-    precedent): same order-independence, but the sums stay in
+    long — the price_quantity_elasticity precedent; the integer-scaled
+    fold of the operators/linalg.py module doc): same order-independence, but the sums stay in
     whole-stage codegen instead of interpreted BigDecimal; the oracle
     is regenerated with the matching CAST(SUM(...BIGINT) AS
     DOUBLE)/1e10 rescale. |terms| ≤ ~1e11 with ≤ 4096 dims per vector

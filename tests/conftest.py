@@ -34,8 +34,10 @@ def _count_classes(node, counts: Counter) -> None:
             counts[cls.rsplit(".", 1)[-1]] += 1
         for k, v in node.items():
             # an InMemoryRelation serializes its cached physical plan
-            # (more than once under AQE) — its nodes are not this plan's
-            if k != "cacheBuilder":
+            # (more than once under AQE) — its nodes are not this plan's;
+            # an executed AQE query stage serializes its plan twice, the
+            # second time as "_canonicalized"
+            if k not in ("cacheBuilder", "_canonicalized"):
                 _count_classes(v, counts)
 
 

@@ -179,7 +179,7 @@ def test_simhash_hot_bucket_cap(spark):
     assert (2000, 2001) in got
 
 
-def test_band_table_incremental_join_skips_corpus_shuffle(spark):
+def test_band_table_incremental_join_skips_corpus_shuffle(spark, plan_nodes):
     # the stored-band-table ingest path: corpus bands live in a table
     # bucketed on the band join keys, so the per-ingest candidate join
     # shuffles ONLY the new batch — the corpus side reads in place.
@@ -219,10 +219,11 @@ def test_band_table_incremental_join_skips_corpus_shuffle(spark):
             cands._jdf.queryExecution().executedPlan().toString()
             .split("== Initial Plan ==")[0]
         )
-        # exactly two exchanges: the new batch shuffling to the bucket
-        # layout, and the pair dropDuplicates — NONE above the corpus
-        # band-table scan (bucketing pre-paid it)
-        assert plan.count("Exchange hashpartitioning") == 2, plan
+        # exactly two hash exchanges: the new batch shuffling to the
+        # bucket layout, and the pair dropDuplicates — NONE above the
+        # corpus band-table scan (bucketing pre-paid it)
+        nodes = plan_nodes(cands, "executed")
+        assert nodes["HashPartitioning"] == 2, (nodes, plan)
         assert "FileScan parquet" in plan and "Bucketed: true" in plan, plan
 
         # control: same join against an UNBUCKETED copy needs a third
@@ -238,11 +239,8 @@ def test_band_table_incremental_join_skips_corpus_shuffle(spark):
         plain = incremental_candidates_vs_band_table(
             spark, "band_corpus_plain", new, hot_bucket_cap=None
         )
-        pplan = (
-            plain._jdf.queryExecution().executedPlan().toString()
-            .split("== Initial Plan ==")[0]
-        )
-        assert pplan.count("Exchange hashpartitioning") == 3, pplan
+        pnodes = plan_nodes(plain, "executed")
+        assert pnodes["HashPartitioning"] == 3, pnodes
         assert {(r.id_a, r.id_b) for r in plain.collect()} == got
 
         # the stored-table path generates exactly the candidates the

@@ -9,6 +9,9 @@ from __future__ import annotations
 
 import hashlib
 
+from technical_test_data_engineer_spark.observe import formatted_plan, scan_counts
+from technical_test_data_engineer_spark.plans import QUERIES
+
 
 def _py_shingles(text: str, n: int = 3) -> set[str]:
     toks = text.split(" ")
@@ -299,24 +302,6 @@ def test_source_mixture_drift_matches_pure_python(spark, sf_dir):
     assert len(batch_tot) > 1, "vacuous fixture: single batch"
 
 
-def _scan_counts(spark, sf_dir, name: str):
-    """Per-table parquet scan counts from the formatted plan — the
-    audit_scans.py metric (see tests/test_round9_ops.py)."""
-    import re
-    from collections import Counter
-
-    from technical_test_data_engineer_spark.plans import QUERIES
-
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    pat = re.compile(
-        r"InMemoryFileIndex\s*(?:\(\d+ paths\))?\s*\[[^\]]*?/(\w+)\.parquet"
-    )
-    return Counter(pat.findall(plan)), plan
-
-
 def test_curation_pipeline_scan_budget(spark, sf_dir):
     """The composed pipeline's contract: documents scans stay at the
     five documented roles (band build, CC nodes, token/keeper frame,
@@ -324,7 +309,8 @@ def test_curation_pipeline_scan_budget(spark, sf_dir):
     every one a doc_id<450-pruned read. A sixth scan means a stage
     started re-deriving an upstream frame instead of consuming the
     persisted pair/train relations."""
-    counts, plan = _scan_counts(spark, sf_dir, "curation_pipeline_e2e")
+    df = QUERIES["curation_pipeline_e2e"](spark, sf_dir)
+    counts, plan = scan_counts(df), formatted_plan(df)
     assert counts["documents"] <= 5, (counts, plan)
     assert "CartesianProduct" not in plan, plan
 
@@ -333,8 +319,9 @@ def test_source_mixture_drift_single_scan(spark, sf_dir):
     """The mixture monitor is ONE corpus pass by contract (the rollup
     kernel); shares/drift are windows over the bounded rollup. A second
     documents scan means a share started re-reading the corpus."""
-    counts, plan = _scan_counts(spark, sf_dir, "source_mixture_drift")
-    assert counts["documents"] == 1, (counts, plan)
+    df = QUERIES["source_mixture_drift"](spark, sf_dir)
+    counts = scan_counts(df)
+    assert counts["documents"] == 1, (counts, formatted_plan(df))
 
 
 def test_repeated_median_single_pair_pass(spark, sf_dir, plan_nodes):
@@ -345,8 +332,6 @@ def test_repeated_median_single_pair_pass(spark, sf_dir, plan_nodes):
     node types over the full lineage: the query persists its daily
     frame, and clearing the cache before planning keeps the cached
     plan from standing in for (and echoing) that subtree."""
-    from technical_test_data_engineer_spark.plans import QUERIES
-
     df = QUERIES["daily_revenue_repeated_median"](spark, sf_dir)
     spark.catalog.clearCache()
     logical = plan_nodes(df, "analyzed")

@@ -11,6 +11,9 @@ from __future__ import annotations
 import hashlib
 import math
 
+from technical_test_data_engineer_spark.observe import formatted_plan, scan_counts
+from technical_test_data_engineer_spark.plans import QUERIES
+
 
 def test_anchor_recall_probeall_is_one_and_monotone(spark, sf_dir):
     from technical_test_data_engineer_spark.plans.similarity_queries import (
@@ -142,33 +145,14 @@ def test_scurve_monotone_in_similarity(spark, sf_dir):
         assert probs == sorted(probs), (cfg, pts)
 
 
-def _scan_counts(spark, sf_dir, name: str):
-    """Per-table parquet scan counts from the formatted plan — the
-    audit_scans.py metric (BNLJ counts are unusable here: a persisted
-    frame's definition prints once per reference, and the tiny
-    dims-x-queries grid crossJoin legitimately plans as BNLJ)."""
-    import re
-    from collections import Counter
-
-    from technical_test_data_engineer_spark.plans import QUERIES
-
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    pat = re.compile(
-        r"InMemoryFileIndex\s*(?:\(\d+ paths\))?\s*\[[^\]]*?/(\w+)\.parquet"
-    )
-    return Counter(pat.findall(plan)), plan
-
-
 def test_matryoshka_single_pass_scan_count(spark, sf_dir):
     """The r09 single-pass rewrite's contract: embeddings scans exactly
     twice (the fanned-out corpus side and the broadcast query side of
     ONE pair enumeration) — the four-pass form scanned it ten times
     unpersisted."""
-    counts, plan = _scan_counts(spark, sf_dir, "matryoshka_recall_curve")
-    assert counts["embeddings"] == 2, (counts, plan)
+    df = QUERIES["matryoshka_recall_curve"](spark, sf_dir)
+    counts = scan_counts(df)
+    assert counts["embeddings"] == 2, (counts, formatted_plan(df))
 
 
 def test_anchor_routing_scan_budget(spark, sf_dir):
@@ -178,7 +162,8 @@ def test_anchor_routing_scan_budget(spark, sf_dir):
     pass, the query-bounded probe filter, and the exact-reference pass
     — documented in audit_scans.py; a fifth scan means the routing
     side regressed to a join shape."""
-    counts, plan = _scan_counts(spark, sf_dir, "knn_anchor_routing_recall")
+    df = QUERIES["knn_anchor_routing_recall"](spark, sf_dir)
+    counts, plan = scan_counts(df), formatted_plan(df)
     assert counts["embeddings"] <= 4, (counts, plan)
     assert "CartesianProduct" not in plan, plan
 

@@ -62,7 +62,7 @@ def new_docs_dir(spark, sf_dir, tmp_path):
     return path
 
 
-def test_streaming_ingest_dedup_loop_parity(spark, sf_dir, new_docs_dir):
+def test_streaming_ingest_dedup_loop_parity(spark, sf_dir, new_docs_dir, plan_nodes):
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter("doc_id < 300")
     new = docs.filter("doc_id >= 300")
@@ -138,7 +138,8 @@ def test_streaming_ingest_dedup_loop_parity(spark, sf_dir, new_docs_dir):
             cands5._jdf.queryExecution().executedPlan().toString()
             .split("== Initial Plan ==")[0]
         )
-        assert plan.count("Exchange hashpartitioning") == 2, plan
+        nodes = plan_nodes(cands5, "executed")
+        assert nodes["HashPartitioning"] == 2, (nodes, plan)
         assert "Bucketed: true" in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
